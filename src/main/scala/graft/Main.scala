@@ -15,7 +15,12 @@ import graft.pipeline._
   *  - classification: per-partition scorer init, 32-row batches (B1),
   *    sentinel on per-item failure (M3) via [[Infer.classify]];
   *  - output: `path TAB label,%.4f` lines, globally key-sorted (P1 + SH1
-  *    + M6 + K1) via [[Sinks.writeTsv]].
+  *    + M6 + K1). The key is the manifest line itself, so the range sort
+  *    runs on the manifest keys BEFORE scoring ([[Sinks.keyRanges]]: one
+  *    sorted range per core, the reference's mapper fan-out) and the
+  *    scored ranges are written in order with no second sort
+  *    ([[Sinks.writeKeyOrderedTsv]]). Each image is read and scored
+  *    exactly once; the sort's sampling job reads paths only.
   *
   * Scorer dispatch (the reference's DistributedCache wiring,
   * `PredictDriverCluster.java:47-51`):
@@ -44,9 +49,11 @@ import graft.pipeline._
   *    precedence ([[LabelDict.load]]); default is the pinned 30-class
   *    dictionary.
   *
-  * Flags: `--single-file` coalesces the sorted output to one part file
+  * Flags: `--single-file` writes the sorted output as one part file
   * (byte-parity with the reference's single reducer `part-r-00000`;
   * deliberately opt-in — at scale you want one file per range partition).
+  * It asks [[Sinks.keyRanges]] for one range, so the scoring stage runs
+  * as one task — still scoring each image once.
   *
   * Usage errors and job failures exit 1, success exits 0, exactly as the
   * reference driver does.
@@ -153,8 +160,8 @@ object Main {
     // [[Media.fetchByManifest]] and the neural net is sandbox-stubbed, so
     // the CLI scores the address deterministically — same dataflow, same
     // output contract.
-    val items = Sources.manifest(spark, cfg.manifest)
-      .map(line => Item(line, line))
+    val items = Sinks.keyRanges(Sources.manifest(spark, cfg.manifest),
+      singleFile = cfg.singleFile).map(line => Item(line, line))
 
     val preds = if (cfg.logit.isDefined) {
       // The logistic head (graft.Train --logit output): the artifact
@@ -233,6 +240,6 @@ object Main {
           cfg.batchSize)
     }
 
-    Sinks.writeTsv(preds, cfg.outDir, singleFile = cfg.singleFile)
+    Sinks.writeKeyOrderedTsv(preds, cfg.outDir)
   }
 }

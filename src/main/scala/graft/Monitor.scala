@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{CentroidModel, CentroidScorer, Infer, Item,
-  LabelDict, Sources}
+  LabelDict, Sinks, Sources}
 import graft.streaming.ModelDriftStreams
 
 /** Model-health CLI — the batch front door of the serve→monitor chain
@@ -123,11 +123,14 @@ object Monitor {
     }
 
   /** Exact per-class prediction counts of a manifest under the shipped
-    * model: one classify scan collapsing map-side to ≤ classes rows. */
+    * model: one classify scan, spread over one partition per core by
+    * [[Sinks.keyRanges]] ([[Main]]'s manifest fan-out), collapsing
+    * map-side to ≤ classes rows. */
   private def predictionCounts(spark: SparkSession, manifest: String,
       modelName: String, labels: LabelDict, batchSize: Int): Array[Long] = {
     import spark.implicits._
-    val items = Sources.manifest(spark, manifest).map(l => Item(l, l))
+    val items = Sinks.keyRanges(Sources.manifest(spark, manifest))
+      .map(l => Item(l, l))
     val byLabel = Infer
       .classify(items, new CentroidScorer(modelName), labels, batchSize)
       .groupBy(col("label")).agg(count(lit(1)).as("n"))

@@ -193,7 +193,12 @@ object Media {
     * stats see converted pixels — the reference's `convert("RGB")`. */
   private def decodeRgb(content: Array[Byte]): (java.awt.image.BufferedImage, Array[Int]) = {
     if (content.isEmpty) throw new IllegalArgumentException("empty media object")
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
+    // An explicit in-memory stream: `ImageIO.read(InputStream)` honours
+    // the JVM-global `useCache` (default on) and spools every image
+    // through a temp file in `java.io.tmpdir`.
+    val img = javax.imageio.ImageIO.read(
+      new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(content)))
     if (img == null) throw new IllegalArgumentException("undecodable image")
     (img, img.getRGB(0, 0, img.getWidth, img.getHeight, null, 0, img.getWidth))
   }
@@ -407,10 +412,6 @@ object Media {
       batchSize: Int = DefaultBatchSize): Dataset[MediaMeta] = {
     import objects.sparkSession.implicits._
     objects.mapPartitions { it =>
-      // Per-partition decoder init happens here. ImageIO's reader
-      // registry scan is per-JVM; disabling the on-disk cache keeps
-      // decode purely in-memory for task-sized payloads.
-      javax.imageio.ImageIO.setUseCache(false)
       it.grouped(batchSize).flatMap { batch =>
         batch.map { m =>
           try {
@@ -486,7 +487,6 @@ object Media {
       batchSize: Int = DefaultBatchSize): Dataset[MediaFeatures] = {
     import objects.sparkSession.implicits._
     objects.mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
       it.grouped(batchSize).flatMap { batch =>
         batch.flatMap { m =>
           try {

@@ -19,18 +19,46 @@ object Sinks {
         concat_ws(",", col("label"),
           format_string("%.4f", col("prob"))).as("v"))
 
-  /** Write the sorted TSV. `orderBy` range-partitions the sort (the
-    * parallel analog of the reference's single reducer); `singleFile`
-    * additionally coalesces to one part file for byte-compat with
-    * `part-r-00000` — correct for small outputs, deliberately NOT the
-    * default at scale. */
+  /** Manifest keys ready for scoring in global key order: one range
+    * partition per core, each sorted. The output key of a classify job
+    * is the trimmed manifest line, known before any image is read, so
+    * the range shuffle and its sampling job move paths, not scored rows
+    * (the cheapest records that carry the key), and scoring runs once,
+    * in parallel. The count is explicit: AQE never coalesces a shuffle
+    * whose partition count was asked for, and left to itself it folds
+    * this few-KB shuffle back into one task. `singleFile` asks for one
+    * range instead: the scoring stage then runs as one task, still
+    * scoring each line once, and writes one part file. */
+  def keyRanges(lines: Dataset[String],
+      singleFile: Boolean = false): Dataset[String] = {
+    val n =
+      if (singleFile) 1 else lines.sparkSession.sparkContext.defaultParallelism
+    lines.repartitionByRange(n, col("value")).sortWithinPartitions(col("value"))
+  }
+
+  /** Write the sorted TSV of arbitrary predictions. `orderBy`
+    * range-partitions the sort (the parallel analog of the reference's
+    * single reducer); its sampling job re-runs everything upstream of
+    * the sort, so a job whose keys exist before scoring orders them with
+    * [[keyRanges]] and writes through [[writeKeyOrderedTsv]] instead.
+    * `singleFile` additionally coalesces to one part file for byte-compat
+    * with `part-r-00000` — correct for small outputs, deliberately NOT
+    * the default at scale. */
   def writeTsv(preds: Dataset[Prediction], out: String,
       singleFile: Boolean = false): Unit = {
     val sorted = kvFrame(preds).orderBy(col("k"))
-    val df = if (singleFile) sorted.coalesce(1) else sorted
-    df.select(concat_ws("\t", col("k"), col("v")).as("value"))
-      .write.mode("overwrite").text(out)
+    writeKv(if (singleFile) sorted.coalesce(1) else sorted, out)
   }
+
+  /** Write predictions that are already in global key order — scored,
+    * order-preserving, from [[keyRanges]] — with no second sort: one
+    * part file per range, in key order by file name. */
+  def writeKeyOrderedTsv(preds: Dataset[Prediction], out: String): Unit =
+    writeKv(kvFrame(preds), out)
+
+  private def writeKv(kv: DataFrame, out: String): Unit =
+    kv.select(concat_ws("\t", col("k"), col("v")).as("value"))
+      .write.mode("overwrite").text(out)
 
   /** JSONL writer — the interchange twin of [[Sources.jsonl]]. One JSON
     * object per line, written in parallel (one file per partition);

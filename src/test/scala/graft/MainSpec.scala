@@ -103,6 +103,41 @@ class MainSpec extends AnyFunSuite with SparkSpec with Matchers {
       surviving.sorted.map(l => s"$l\t${Pipeline.Labels(2)},0.7500")
   }
 
+  test("multi-part output: every manifest line scored exactly once, part " +
+      "files in name order globally key-sorted") {
+    // The scorer logs every payload it receives: a sort whose sampling
+    // job re-runs the scoring stage shows up as a second log line.
+    val log = tmpDir().resolve("payloads.log")
+    val script = Files.createTempFile("graft_cli_logging_scorer_", ".sh")
+    Files.writeString(script, "#!/bin/sh\ncat \"$1\" >> '" + log + "'\n" +
+      "sed 's/$/,2,0.7500/' \"$1\"\n")
+    Files.setPosixFilePermissions(script,
+      PosixFilePermissions.fromString("rwxr-xr-x"))
+    script.toFile.deleteOnExit()
+
+    val n = 8 * spark.sparkContext.defaultParallelism
+    val distinct = new scala.util.Random(7)
+      .shuffle((0 until n).map(i => f"/data/img/$i%04d.png"))
+    val dupes = distinct.take(5)
+    val lines = ("\uFEFF" + distinct.head) +: distinct.tail ++:
+      Seq("", "   ") ++: dupes.map(l => s"  $l  ")
+    val surviving = (distinct ++ dupes).sorted
+
+    val out = tmpDir().resolve("out")
+    Main.run(Array(writeManifest(lines).toString, out.toString,
+      "--pipe", script.toString), Some(spark)) shouldBe 0
+
+    val parts = Files.list(out).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .sortBy(_.getFileName.toString)
+    parts.size should be > 1
+    val rows = parts.flatMap(f => Files.readAllLines(f).asScala)
+    val keys = rows.map(_.takeWhile(_ != '\t'))
+    keys shouldBe keys.sorted
+    rows shouldBe surviving.map(l => s"$l\t${Pipeline.Labels(2)},0.7500")
+    Files.readAllLines(log).asScala.sorted shouldBe surviving
+  }
+
   test("pre-existing output directory fails the job (Hadoop contract)") {
     val out = tmpDir() // exists
     Main.run(Array(writeManifest(manifestLines).toString, out.toString),

@@ -140,6 +140,42 @@ class MediaSpec extends AnyFunSuite with SparkSpec with Matchers {
     feats("c.wav").features shouldBe featureStub("fake-audio".getBytes)
   }
 
+  test("image decode stays in memory: no ImageIO cache file, no global " +
+      "ImageIO state changed, undecodable bytes still throw") {
+    import javax.imageio.ImageIO
+    val png = realPngBytes()
+    val objs = binaryObjects(spark, tmpMediaDir()) // fixtures written first
+    val cacheDir = Files.createTempDirectory("imageio_cache_")
+    // A spool file is deleted when its stream closes, so "stays empty"
+    // is checked on the directory's create events, not on a listing.
+    val watcher = cacheDir.getFileSystem.newWatchService()
+    cacheDir.register(watcher, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+    val (useCache0, cacheDir0) = (ImageIO.getUseCache, ImageIO.getCacheDirectory)
+    try {
+      ImageIO.setUseCache(true)
+      ImageIO.setCacheDirectory(cacheDir.toFile)
+      imageFeatures(png)(0) shouldBe 0.5f
+      decodeImage(png).avgLuma shouldBe 127.5 +- 1e-9
+      phash(png) // decodes through the same path
+      val metas = decodeAll(objs).collect()
+        .map(m => Sources.basename(m.path) -> m.ok).toMap
+      metas("real.png") shouldBe true
+      metas("a.jpg") shouldBe false // the sentinel row
+      an[IllegalArgumentException] should be thrownBy
+        decodeImage("fake-jpeg-bytes".getBytes)
+      an[IllegalArgumentException] should be thrownBy
+        imageFeatures(Array.empty[Byte])
+
+      watcher.poll(1, java.util.concurrent.TimeUnit.SECONDS) shouldBe null
+      Files.list(cacheDir).count() shouldBe 0L
+      ImageIO.getUseCache shouldBe true
+    } finally {
+      watcher.close()
+      ImageIO.setUseCache(useCache0)
+      ImageIO.setCacheDirectory(cacheDir0)
+    }
+  }
+
   test("audioFeatures: REAL energy envelope — silence then a constant " +
       "half-amplitude block puts all mass in the top 8 segments") {
     val samples = Array.tabulate[Short](1600)(i =>
